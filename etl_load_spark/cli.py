@@ -11,11 +11,11 @@ JSON job config. Here the control plane is a thin CLI over the same spec:
 
 ``run`` executes the spec through the step runner and prints the JobResult;
 ``validate`` parses the spec and checks endpoint types against the
-connector registry without executing (the VALIDATE_SOURCE step's static
-half); ``explain`` prints Catalyst's formatted physical plan without
-executing — the pre-flight pushdown/broadcast/shuffle check SCALE.md
-prescribes. Exit code 0 on COMPLETED/valid, 1 otherwise (jobtrigger.sh
-exit-code contract).
+connector registry and the transformation type against the stage table
+without executing (the VALIDATE_SOURCE step's static half); ``explain``
+prints Catalyst's formatted physical plan without executing — the
+pre-flight pushdown/broadcast/shuffle check SCALE.md prescribes. Exit code
+0 on COMPLETED/valid, 1 otherwise (jobtrigger.sh exit-code contract).
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ def _build_spark(app: str):
 
 
 def cmd_validate(path: str) -> dict:
+    from etl_load_spark.plans.builder import KNOWN_TYPES
     from etl_load_spark.sources.registry import _READERS, _WRITERS
     from etl_load_spark.spec import JobSpec
 
@@ -41,6 +42,9 @@ def cmd_validate(path: str) -> dict:
         problems.append(f"unknown source type {spec.source.type!r}")
     if spec.destination and spec.destination.type.upper() not in _WRITERS:
         problems.append(f"unknown destination type {spec.destination.type!r}")
+    tr = spec.transformation
+    if tr and tr.type.upper() not in KNOWN_TYPES:
+        problems.append(f"unknown transformation type {tr.type!r}")
     for m in spec.mappings:
         if not m.source:
             problems.append("mapping with empty sourceFieldName")

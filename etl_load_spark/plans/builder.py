@@ -14,6 +14,12 @@ filter push down into the source scan automatically.
 
 from __future__ import annotations
 
+import importlib.util
+import inspect
+import re
+from dataclasses import dataclass
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from etl_load_spark.functions.casts import cast_column
@@ -86,122 +92,72 @@ def build_plan(spark: SparkSession, spec: JobSpec,
 
 def apply_transformation(df: DataFrame, spark: SparkSession,
                          spec: JobSpec) -> DataFrame:
-    """U1 pluggable transform stage (spec.Transformation): load the user
-    script and apply its ``transform`` (DataFrame-level) or
-    ``transform_pandas`` (Arrow-batched mapInPandas) hook."""
+    """U1 pluggable transform stage (spec.Transformation): NONE passes
+    through; PYTHON_SCRIPT loads the user script and applies its
+    ``transform`` (DataFrame-level) or ``transform_pandas`` (Arrow-batched
+    mapInPandas) hook; every other type is one STAGES entry — its batch
+    function, or on a stream its watermark twin or batch-only refusal."""
     tr = spec.transformation
     if tr is None or tr.type.upper() == "NONE":
         return df
-    if tr.type.upper() == "SCD2_MERGE":
-        return _scd2_transform(df, spark, spec)
-    if tr.type.upper() == "CDC_SCD2_APPLY":
-        if df.isStreaming:
+    t = tr.type.upper()
+    if t == "PYTHON_SCRIPT":
+        if not tr.script_path:
             raise ValueError(
-                "transformation.type=CDC_SCD2_APPLY is batch-only (version "
-                "bounding needs the whole key group); land the feed, then "
-                "apply each landed batch downstream")
-        return _cdc_scd2_transform(df, spark, spec)
-    if tr.type.upper() == "DECONTAMINATE":
-        if df.isStreaming:
-            raise ValueError(
-                "transformation.type=DECONTAMINATE is batch-only; the bloom "
-                "probe and verify join are stream-safe map-side stages, but "
-                "the per-document shared-n-gram aggregation needs a landed "
-                "batch pass — land the stream, then run DECONTAMINATE "
-                "downstream")
-        return _decontaminate_transform(df, spark, spec)
-    if tr.type.upper() == "INCREMENTAL_DEDUP":
-        if df.isStreaming:
-            raise ValueError(
-                "transformation.type=INCREMENTAL_DEDUP is batch-only (the "
-                "within-batch survivor needs the whole content group); use "
-                "streaming.windows.stream_content_dedup for checkpointed "
-                "first-seen-wins content admission on a live stream "
-                "(stream-static anti join against the admitted index + "
-                "stateful in-stream dedup), or land the stream and admit "
-                "each landed batch downstream")
-        return _incremental_dedup_transform(df, spark, spec)
-    if tr.type.upper() == "IMPORTANCE_RESAMPLE":
-        if df.isStreaming:
-            raise ValueError(
-                "transformation.type=IMPORTANCE_RESAMPLE is batch-only "
-                "(the raw-corpus feature histogram is corpus-global); "
-                "train the histograms offline, then score the stream with "
-                "a broadcast join against the frozen bucket-score table")
-        return _importance_resample_transform(df, spark, spec)
-    if tr.type.upper() == "ASOF_JOIN":
-        if df.isStreaming:
-            raise ValueError(
-                "transformation.type=ASOF_JOIN is batch-only (the "
-                "union-window argmax needs each key's ordered history); "
-                "for bounded-lookback stream enrichment use "
-                "streaming.windows.stream_interval_join, or land the "
-                "stream and enrich each landed batch downstream")
-        return _asof_join_transform(df, spark, spec)
-    if tr.type.upper() == "HARD_NEGATIVES":
-        if df.isStreaming:
-            raise ValueError(
-                "transformation.type=HARD_NEGATIVES is batch-only (the "
-                "per-anchor top-k and best-positive max need the whole "
-                "corpus snapshot); land the stream, then mine each landed "
-                "snapshot downstream")
-        return _hard_negatives_transform(df, spark, spec)
-    if tr.type.upper() in _CORPUS_TRANSFORMS:
-        if df.isStreaming and tr.type.upper() in _STREAMING_TWINS:
-            # pure-aggregate rollups stream as their watermark twins
-            # (round 11): the identical aggregation minus the batch
-            # output sort, state bounded by the watermark. With a
-            # file destination use streaming.output_mode=update — the
-            # sink materializes via the continuous-aggregate upsert
-            # (dynamic partition overwrite per micro-batch).
-            return _STREAMING_TWINS[tr.type.upper()](df,
-                                                     tr.parameters or {})
-        if df.isStreaming and tr.type.upper() in _BATCH_ONLY_TRANSFORMS:
-            # multi-stage stateful plans are not expressible as ONE
-            # streaming query. Fail with the right pointer instead of
-            # Spark's output-mode error. (QUALITY_FILTER and
-            # MIXTURE_SAMPLE are per-row and work on streams.)
-            raise ValueError(
-                f"transformation.type={tr.type.upper()} is batch-only; "
-                f"{_BATCH_ONLY_TRANSFORMS[tr.type.upper()]}")
-        return _CORPUS_TRANSFORMS[tr.type.upper()](df, tr.parameters or {})
-    if tr.type.upper() != "PYTHON_SCRIPT":
+                "transformation.type=PYTHON_SCRIPT requires scriptPath")
+        mod_spec = importlib.util.spec_from_file_location(
+            "etl_user_transform", tr.script_path)
+        mod = importlib.util.module_from_spec(mod_spec)
+        mod_spec.loader.exec_module(mod)
+        if hasattr(mod, "transform"):
+            return mod.transform(df, spark, tr.parameters)
+        if hasattr(mod, "transform_pandas"):
+            fn, params = mod.transform_pandas, tr.parameters
+            return df.mapInPandas(lambda it: (fn(pdf, params) for pdf in it),
+                                  schema=df.schema)
+        raise ValueError(
+            f"{tr.script_path} defines neither transform(df, spark, params) "
+            f"nor transform_pandas(pdf, params)")
+    stage = STAGES.get(t)
+    if stage is None:
         raise ValueError(f"unknown transformation.type: {tr.type!r} "
-                         "(known: NONE, PYTHON_SCRIPT, SCD2_MERGE, "
-                         "PASSAGE_DEDUP, QUALITY_FILTER, MIXTURE_SAMPLE, "
-                         "QUALITY_CLASSIFIER, SEMANTIC_DEDUP, DECONTAMINATE, "
-                         "CLUSTER_BALANCE, CHUNK_DOCUMENTS, LM_SURPRISAL, "
-                         "CROSS_SOURCE_DEDUP, TOKEN_BUDGET, ASSIGN_SHARDS, "
-                         "SEQUENCE_PACK, INCREMENTAL_DEDUP, "
-                         "QUANTIZE_EMBEDDINGS, STRATIFIED_SAMPLE, "
-                         "URL_CANONICALIZE, IMPORTANCE_RESAMPLE, MARKUP_STRIP, "
-                         "CDC_SCD2_APPLY, ASSIGN_SPLIT, PRIORITY_SAMPLE, "
-                         "QUOTA_SAMPLE, HARD_NEGATIVES, "
-                         "WINDOW_MINHASH_DEDUP, GAPFILL, COUNTER_RATE, "
-                         "OHLC, TIME_WEIGHTED_AVG, STATE_DURATIONS, "
-                         "HEARTBEAT_UPTIME, LTTB, TREND, INSTANT_RATE, "
-                         "VALUE_HISTOGRAM, DELTA, VALUE_STATS, CHANGES, "
-                         "VALUE_TOPK, ASOF_JOIN)")
-    if not tr.script_path:
-        raise ValueError("transformation.type=PYTHON_SCRIPT requires scriptPath")
-    import importlib.util
-    mod_spec = importlib.util.spec_from_file_location("etl_user_transform",
-                                                      tr.script_path)
-    mod = importlib.util.module_from_spec(mod_spec)
-    mod_spec.loader.exec_module(mod)
-    if hasattr(mod, "transform"):
-        return mod.transform(df, spark, tr.parameters)
-    if hasattr(mod, "transform_pandas"):
-        fn, params = mod.transform_pandas, tr.parameters
-        return df.mapInPandas(lambda it: (fn(pdf, params) for pdf in it),
-                              schema=df.schema)
-    raise ValueError(
-        f"{tr.script_path} defines neither transform(df, spark, params) "
-        f"nor transform_pandas(pdf, params)")
+                         f"(known: {', '.join(KNOWN_TYPES)})")
+    p = tr.parameters or {}
+    build = stage.batch
+    if df.isStreaming and stage.stream is not None:
+        if isinstance(stage.stream, str):
+            raise ValueError(
+                f"transformation.type={t} is batch-only{stage.stream}")
+        _refuse_stream_carry(t, stage.batch.kwargs(p))
+        build = stage.stream
+
+    def source(name: str) -> DataFrame | None:
+        from etl_load_spark.sources.registry import read_source
+        ep = spec.extra_sources.get(name)
+        return None if ep is None else read_source(spark, ep)
+
+    return build(df, p, source)
 
 
-def _scd2_transform(df: DataFrame, spark: SparkSession,
-                    spec: JobSpec) -> DataFrame:
+def _refuse_stream_carry(t: str, batch_kwargs: dict) -> None:
+    """The carry form of a rollup (carryIn, and the hotSplit knob that
+    rides it) has no streaming twin: refuse it instead of dropping it."""
+    if batch_kwargs.get("carry_in"):
+        raise ValueError(
+            f"{t} carryIn=true is batch-only on a stream: the carried "
+            "sample is the previous bucket's last row, which the "
+            "watermark has already evicted when the next bucket opens — "
+            "land the self-contained rollup incrementally, then "
+            "interpolate carries downstream (the batch operator's "
+            "carry_in=True over the landed table)")
+    if batch_kwargs.get("hot_split"):
+        raise ValueError(
+            f"{t} hotSplit only applies to the batch carry form (there is "
+            "no per-key window to split on a stream — the streaming twin "
+            "is already per-bucket-parallel)")
+
+
+def _scd2_transform(df: DataFrame, p: dict, source) -> DataFrame:
     """Declarative SCD Type-2 merge stage (operators/scd.py wired into the
     job spec): the mapped source rows are the UPDATE batch; the existing
     dimension comes from ``extra_sources["dim"]`` — usually the same table
@@ -217,22 +173,19 @@ def _scd2_transform(df: DataFrame, spark: SparkSession,
     dimension by is_current so history files rewrite-free (SCALE.md).
     """
     from etl_load_spark.operators.scd import as_scd2, scd2_merge
-    from etl_load_spark.sources.registry import read_source
 
-    p = spec.transformation.parameters or {}
     missing = [k for k in ("keyColumns", "attrColumns", "effectiveDate")
                if not p.get(k)]
     if missing:
         raise ValueError(f"SCD2_MERGE parameters missing: {missing}")
-    if "dim" not in spec.extra_sources:
+    dim = source("dim")
+    if dim is None:
         return as_scd2(df, p["effectiveDate"])
-    dim = read_source(spark, spec.extra_sources["dim"])
     return scd2_merge(dim, df, list(p["keyColumns"]), list(p["attrColumns"]),
                       p["effectiveDate"])
 
 
-def _cdc_scd2_transform(df: DataFrame, spark: SparkSession,
-                        spec: JobSpec) -> DataFrame:
+def _cdc_scd2_transform(df: DataFrame, p: dict, source) -> DataFrame:
     """Declarative CDC→SCD2 stage (operators/scd.cdc_scd2_apply wired
     into the job spec): the mapped source rows are the CHANGE FEED
     (op column with I/U/D + a monotone seq column); the existing
@@ -240,24 +193,22 @@ def _cdc_scd2_transform(df: DataFrame, spark: SparkSession,
     attrColumns, seqColumn (all required), opColumn ('op'). Write the
     result with mode=overwrite (the fold re-emits the full dimension)."""
     from etl_load_spark.operators.scd import cdc_scd2_apply
-    from etl_load_spark.sources.registry import read_source
 
-    p = spec.transformation.parameters or {}
     missing = [k for k in ("keyColumns", "attrColumns", "seqColumn")
                if not p.get(k)]
     if missing:
         raise ValueError(f"CDC_SCD2_APPLY parameters missing: {missing}")
-    if "dim" not in spec.extra_sources:
+    dim = source("dim")
+    if dim is None:
         raise ValueError("CDC_SCD2_APPLY requires extraSources.dim "
                          "(the existing SCD2 dimension; bootstrap one "
                          "with SCD2_MERGE first)")
-    dim = read_source(spark, spec.extra_sources["dim"])
     return cdc_scd2_apply(dim, df, list(p["keyColumns"]),
                           list(p["attrColumns"]), p["seqColumn"],
                           op_col=p.get("opColumn", "op"))
 
 
-def _passage_dedup_transform(df: DataFrame, p: dict) -> DataFrame:
+def _passage_dedup_transform(df: DataFrame, p: dict, source=None) -> DataFrame:
     """Declarative passage-level dedup stage (operators/corpus.py wired
     into the job spec): replaces ``textColumn`` with its first-occurrence
     rebuild, preserving every other column. Parameters: idColumn
@@ -278,7 +229,8 @@ def _passage_dedup_transform(df: DataFrame, p: dict) -> DataFrame:
                   id_col))
 
 
-def _quality_filter_transform(df: DataFrame, p: dict) -> DataFrame:
+def _quality_filter_transform(df: DataFrame, p: dict,
+                              source=None) -> DataFrame:
     """Declarative Gopher-rule quality stage. mode='filter' (default)
     keeps only rows passing every rule; mode='annotate' appends the rule
     booleans + ``keep`` so downstream steps can route on them. Threshold
@@ -298,7 +250,8 @@ def _quality_filter_transform(df: DataFrame, p: dict) -> DataFrame:
     return df.filter(keep)
 
 
-def _mixture_sample_transform(df: DataFrame, p: dict) -> DataFrame:
+def _mixture_sample_transform(df: DataFrame, p: dict,
+                              source=None) -> DataFrame:
     """Declarative data-mixture stage: deterministic weighted sampling by
     a key column. Parameters: weights (dict source→fraction, required),
     keyColumn ('source'), idColumn ('doc_id'), defaultWeight (0.0),
@@ -317,7 +270,8 @@ def _mixture_sample_transform(df: DataFrame, p: dict) -> DataFrame:
 
 
 
-def _quality_classifier_transform(df: DataFrame, p: dict) -> DataFrame:
+def _quality_classifier_transform(df: DataFrame, p: dict,
+                                  source=None) -> DataFrame:
     """Declarative model-based quality stage (operators/corpus.
     quality_classifier): mode='filter' (default) keeps rows the classifier
     scores above keepThreshold; mode='annotate' appends
@@ -333,7 +287,8 @@ def _quality_classifier_transform(df: DataFrame, p: dict) -> DataFrame:
     return df.join(keep_ids, id_col, "left_semi")
 
 
-def _semantic_dedup_transform(df: DataFrame, p: dict) -> DataFrame:
+def _semantic_dedup_transform(df: DataFrame, p: dict,
+                              source=None) -> DataFrame:
     """Declarative SemDeDup stage (operators/similarity.semantic_dedup):
     finds near-duplicate pairs via k-means-blocked exact cosine and drops
     the HIGHER id of every pair. Parameters: idColumn ('vec_id'),
@@ -350,7 +305,8 @@ def _semantic_dedup_transform(df: DataFrame, p: dict) -> DataFrame:
     return df.join(losers, id_col, "left_anti")
 
 
-def _chunk_documents_transform(df: DataFrame, p: dict) -> DataFrame:
+def _chunk_documents_transform(df: DataFrame, p: dict,
+                               source=None) -> DataFrame:
     """Declarative chunking stage (operators/corpus.chunk_documents):
     REPLACES the row shape with the chunk relation (idColumn, chunk_no,
     chunk_text, n_tokens) — the shard step ahead of embedding/indexing.
@@ -363,7 +319,7 @@ def _chunk_documents_transform(df: DataFrame, p: dict) -> DataFrame:
                            int(p.get("overlap", 16)))
 
 
-def _lm_surprisal_transform(df: DataFrame, p: dict) -> DataFrame:
+def _lm_surprisal_transform(df: DataFrame, p: dict, source=None) -> DataFrame:
     """Declarative LM-surprisal stage (operators/text.bigram_surprisal —
     the CCNet perplexity filter): score each document's bits-per-bigram
     under the corpus-trained Laplace-smoothed bigram model.
@@ -413,8 +369,7 @@ def _lm_surprisal_transform(df: DataFrame, p: dict) -> DataFrame:
     return df.join(keep, id_col, "left_semi")
 
 
-def _decontaminate_transform(df: DataFrame, spark: SparkSession,
-                             spec: JobSpec) -> DataFrame:
+def _decontaminate_transform(df: DataFrame, p: dict, source) -> DataFrame:
     """Declarative eval-set decontamination stage (operators/bloom.
     decontaminate): the held-out benchmark comes from
     ``extra_sources["eval"]``; mode='filter' (default) DROPS every
@@ -427,13 +382,11 @@ def _decontaminate_transform(df: DataFrame, spark: SparkSession,
     from pyspark.sql import functions as F
 
     from etl_load_spark.operators.bloom import decontaminate
-    from etl_load_spark.sources.registry import read_source
-    if "eval" not in spec.extra_sources:
+    ev = source("eval")
+    if ev is None:
         raise ValueError("DECONTAMINATE requires extraSources.eval "
                          "(the held-out benchmark to scrub against)")
-    p = spec.transformation.parameters or {}
     id_col = p.get("idColumn", "doc_id")
-    ev = read_source(spark, spec.extra_sources["eval"])
     if p.get("evalFilter"):
         ev = ev.filter(p["evalFilter"])
     ev = ev.select(
@@ -454,7 +407,8 @@ def _decontaminate_transform(df: DataFrame, spark: SparkSession,
                    id_col, "left_anti")
 
 
-def _cluster_balance_transform(df: DataFrame, p: dict) -> DataFrame:
+def _cluster_balance_transform(df: DataFrame, p: dict,
+                               source=None) -> DataFrame:
     """Declarative cluster-balanced selection stage (operators/similarity
     anchor_assign + cluster_balanced_sample): assign rows to their
     nearest label anchor by cosine, thin every cluster toward the
@@ -476,7 +430,8 @@ def _cluster_balance_transform(df: DataFrame, p: dict) -> DataFrame:
     return df.join(kept.select(id_col, "cluster"), id_col)
 
 
-def _cross_source_dedup_transform(df: DataFrame, p: dict) -> DataFrame:
+def _cross_source_dedup_transform(df: DataFrame, p: dict,
+                                  source=None) -> DataFrame:
     """Declarative cross-source priority dedup: keep one survivor per
     identical normalized content, preferring sources in
     parameters.priority order (required, best first), min id as
@@ -494,7 +449,7 @@ def _cross_source_dedup_transform(df: DataFrame, p: dict) -> DataFrame:
     return df.join(surv.select(id_col), id_col, "semi")
 
 
-def _token_budget_transform(df: DataFrame, p: dict) -> DataFrame:
+def _token_budget_transform(df: DataFrame, p: dict, source=None) -> DataFrame:
     """Declarative token-budget mixture realization: keep documents that
     fit each source's TOKEN budget (parameters.budgets, required), taken
     in deterministic md5 order with the boundary document included.
@@ -513,7 +468,7 @@ def _token_budget_transform(df: DataFrame, p: dict) -> DataFrame:
     return df.join(kept.select(F.col("_id").alias(id_col)), id_col, "semi")
 
 
-def _assign_shards_transform(df: DataFrame, p: dict) -> DataFrame:
+def _assign_shards_transform(df: DataFrame, p: dict, source=None) -> DataFrame:
     """Declarative shard assignment: append a deterministic shard column
     (portable id-hash mod nShards) for the destination's partitionBy —
     a pure projection, so it is stream-safe and adds no shuffle."""
@@ -524,7 +479,7 @@ def _assign_shards_transform(df: DataFrame, p: dict) -> DataFrame:
                         shard_col=p.get("shardColumn", "shard"))
 
 
-def _sequence_pack_transform(df: DataFrame, p: dict) -> DataFrame:
+def _sequence_pack_transform(df: DataFrame, p: dict, source=None) -> DataFrame:
     """Declarative sequence packing (operators/corpus.sequence_pack):
     concat-and-chunk the corpus into fixed ``seqLen`` training windows
     in a deterministic pseudo-random order. mode='annotate' (default)
@@ -547,8 +502,8 @@ def _sequence_pack_transform(df: DataFrame, p: dict) -> DataFrame:
     return df.join(man, id_col, "left")
 
 
-def _incremental_dedup_transform(df: DataFrame, spark: SparkSession,
-                                 spec: JobSpec) -> DataFrame:
+def _incremental_dedup_transform(df: DataFrame, p: dict,
+                                 source) -> DataFrame:
     """Declarative batch admission against the already-admitted corpus
     (operators/dedup.incremental_dedup): the admitted-content index
     comes from ``extraSources.history``; rows whose normalized content
@@ -561,15 +516,14 @@ def _incremental_dedup_transform(df: DataFrame, spark: SparkSession,
     from pyspark.sql import functions as F
 
     from etl_load_spark.operators.dedup import incremental_dedup
-    from etl_load_spark.sources.registry import read_source
-    if "history" not in spec.extra_sources:
+    hist = source("history")
+    if hist is None:
         raise ValueError("INCREMENTAL_DEDUP requires extraSources.history "
                          "(the already-admitted corpus or its content "
                          "index)")
-    p = spec.transformation.parameters or {}
     id_col = p.get("idColumn", "doc_id")
     text_col = p.get("textColumn", "text")
-    hist = read_source(spark, spec.extra_sources["history"]).select(
+    hist = hist.select(
         F.col(p.get("historyTextColumn", text_col)).alias(text_col))
     surv = incremental_dedup(
         df, hist, id_col=id_col, text_col=text_col,
@@ -578,8 +532,8 @@ def _incremental_dedup_transform(df: DataFrame, spark: SparkSession,
     return df.join(surv.select(id_col), id_col, "semi")
 
 
-def _importance_resample_transform(df: DataFrame, spark: SparkSession,
-                                   spec: JobSpec) -> DataFrame:
+def _importance_resample_transform(df: DataFrame, p: dict,
+                                   source) -> DataFrame:
     """Declarative DSIR-style targeted selection (operators/corpus.
     importance_weights): score documents by the quantized
     log-likelihood ratio of their hashed n-gram features under the
@@ -594,14 +548,12 @@ def _importance_resample_transform(df: DataFrame, spark: SparkSession,
     from pyspark.sql import functions as F
 
     from etl_load_spark.operators.corpus import importance_weights
-    from etl_load_spark.sources.registry import read_source
-    if "target" not in spec.extra_sources:
+    tgt = source("target")
+    if tgt is None:
         raise ValueError("IMPORTANCE_RESAMPLE requires extraSources.target "
                          "(the distribution to select toward)")
-    p = spec.transformation.parameters or {}
     id_col = p.get("idColumn", "doc_id")
     text_col = p.get("textColumn", "text")
-    tgt = read_source(spark, spec.extra_sources["target"])
     if p.get("targetFilter"):
         tgt = tgt.filter(p["targetFilter"])
     # loud config check: an empty target distribution would NULL the
@@ -632,7 +584,8 @@ def _importance_resample_transform(df: DataFrame, spark: SparkSession,
     return df.join(keep, id_col, "left_semi")
 
 
-def _quantize_embeddings_transform(df: DataFrame, p: dict) -> DataFrame:
+def _quantize_embeddings_transform(df: DataFrame, p: dict,
+                                   source=None) -> DataFrame:
     """Declarative int8 scalar quantization (operators/similarity.
     quantize_kernel_udf): appends q_min, q_max, q_sum, codes — the
     per-vector calibration range plus the full SQ8 code vector. A PURE
@@ -654,7 +607,8 @@ def _quantize_embeddings_transform(df: DataFrame, p: dict) -> DataFrame:
             .drop("_q"))
 
 
-def _stratified_sample_transform(df: DataFrame, p: dict) -> DataFrame:
+def _stratified_sample_transform(df: DataFrame, p: dict,
+                                 source=None) -> DataFrame:
     """Declarative minority-class balancing (operators/corpus.
     stratified_sample): keep the first min-stratum-size rows of every
     stratum in deterministic md5 order. NULL stratum/id rows drop (no
@@ -671,7 +625,7 @@ def _stratified_sample_transform(df: DataFrame, p: dict) -> DataFrame:
     return df.join(kept.select(id_col), id_col, "semi")
 
 
-def _assign_split_transform(df: DataFrame, p: dict) -> DataFrame:
+def _assign_split_transform(df: DataFrame, p: dict, source=None) -> DataFrame:
     """Declarative leakage-safe split assignment (operators/corpus.
     grouped_split): append a deterministic train/valid/test split keyed
     on ``groupColumn`` (required — e.g. a registered-domain column, so
@@ -694,7 +648,7 @@ def _assign_split_transform(df: DataFrame, p: dict) -> DataFrame:
                       salt=p.get("salt", "gsplit")))
 
 
-def _markup_strip_transform(df: DataFrame, p: dict) -> DataFrame:
+def _markup_strip_transform(df: DataFrame, p: dict, source=None) -> DataFrame:
     """Declarative markup hygiene (operators/text.strip_markup): append
     the cleaned text as ``outputColumn`` ('clean_text'; set it to
     textColumn to clean in place) and — when ``withStats`` (default
@@ -711,7 +665,8 @@ def _markup_strip_transform(df: DataFrame, p: dict) -> DataFrame:
                           strip_markup(F.col(text_col)))
 
 
-def _url_canonicalize_transform(df: DataFrame, p: dict) -> DataFrame:
+def _url_canonicalize_transform(df: DataFrame, p: dict,
+                                source=None) -> DataFrame:
     """Declarative URL key hygiene (operators/text.canonicalize_url):
     append the canonical form of ``urlColumn`` (required — no corpus
     convention to default to) as ``outputColumn`` ('canonical_url'),
@@ -732,7 +687,8 @@ def _url_canonicalize_transform(df: DataFrame, p: dict) -> DataFrame:
     return out
 
 
-def _priority_sample_transform(df: DataFrame, p: dict) -> DataFrame:
+def _priority_sample_transform(df: DataFrame, p: dict,
+                               source=None) -> DataFrame:
     """Declarative exact-SIZE weighted sampling (operators/corpus.
     priority_sample — the q169 A-Res scheme): keep exactly ``size``
     rows, weight-proportionally without replacement, deterministic
@@ -754,7 +710,7 @@ def _priority_sample_transform(df: DataFrame, p: dict) -> DataFrame:
                            salt=p.get("salt", "ares")).drop("_priority")
 
 
-def _quota_sample_transform(df: DataFrame, p: dict) -> DataFrame:
+def _quota_sample_transform(df: DataFrame, p: dict, source=None) -> DataFrame:
     """Declarative balanced fine-tune set (operators/corpus.
     quota_stratified_sample — q170): EXACTLY min(quota, stratum size)
     rows per listed stratum, unlisted strata excluded; per-stratum
@@ -780,7 +736,8 @@ def _quota_sample_transform(df: DataFrame, p: dict) -> DataFrame:
     return df.join(kept.select(id_col), id_col, "semi")
 
 
-def _window_minhash_dedup_transform(df: DataFrame, p: dict) -> DataFrame:
+def _window_minhash_dedup_transform(df: DataFrame, p: dict,
+                                    source=None) -> DataFrame:
     """Declarative paragraph-granularity near-dedup stage
     (operators/dedup.window_minhash_pairs — q171): finds document pairs
     sharing at least one NEAR-duplicate sliding token window (edited
@@ -812,293 +769,8 @@ def _window_minhash_dedup_transform(df: DataFrame, p: dict) -> DataFrame:
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, id_col, "left_anti")
 
-
-def _gapfill_transform(df: DataFrame, p: dict) -> DataFrame:
-    """Declarative time-series gap fill (operators/timeseries.gapfill —
-    q172): bucket-resample a (key, ts, value) feed onto the dense
-    global bucket grid and emit the actual per-bucket average plus the
-    LOCF and linear-interpolation fills with the Timescale edge
-    contract (leading buckets NULL for both fills; trailing buckets
-    carry LOCF only). Row shape CHANGES to
-    (key, bucket_ts, val, locf_val, interp_val). Values must be
-    non-negative (the exact fixed-point half-up arithmetic is unsigned;
-    the operator documents the restriction). Parameters:
-    keyColumn ('user_id'), tsColumn ('ts'), valueColumn ('value'),
-    bucket ('1 day')."""
-    from etl_load_spark.operators.timeseries import gapfill
-    return gapfill(df, key_col=p.get("keyColumn", "user_id"),
-                   ts_col=p.get("tsColumn", "ts"),
-                   value_col=p.get("valueColumn", "value"),
-                   bucket=p.get("bucket", "1 day"))
-
-
-def _counter_rate_transform(df: DataFrame, p: dict) -> DataFrame:
-    """Declarative counter increase/rate with reset detection
-    (operators/timeseries.counter_rate — q173): per-series
-    sample-to-sample deltas ordered by (tsColumn, orderColumn), a
-    decrease = counter restart (the post-reset value is the step),
-    rolled up per bucket to (key, bucket_ts, n_samples, n_resets,
-    increase, rate_per_sec). Row shape CHANGES to the rollup. Values
-    must be non-negative (counters are). Parameters:
-    keyColumn ('user_id'), tsColumn ('ts'), valueColumn ('value'),
-    orderColumn ('event_id'), bucket ('1 day'), bucketSeconds (the
-    rate denominator; defaults to the parsed bucket width, so it
-    cannot silently drift from the bucket — set it only to rate
-    against a different horizon), hotSplit (an interval string, e.g.
-    '1 day': engages the parallel-prefix stitch for feeds where one
-    series dwarfs the rest — identical results, the per-series sort
-    parallelizes per time slice)."""
-    from etl_load_spark.operators.timeseries import counter_rate
-    bs = p.get("bucketSeconds")
-    return counter_rate(df, key_col=p.get("keyColumn", "user_id"),
-                        ts_col=p.get("tsColumn", "ts"),
-                        value_col=p.get("valueColumn", "value"),
-                        order_col=p.get("orderColumn", "event_id"),
-                        bucket=p.get("bucket", "1 day"),
-                        bucket_seconds=int(bs) if bs is not None else None,
-                        hot_split=p.get("hotSplit"))
-
-
-def _ohlc_transform(df: DataFrame, p: dict) -> DataFrame:
-    """Declarative OHLC / candlestick rollup (operators/timeseries.ohlc
-    — q174): per (type, bucket) the open/high/low/close sample values
-    and the sample count; open/close are deterministic via the
-    raise-guarded padded (epoch_micros, orderColumn) key (non-negative
-    timestamps and order ids only — a violating feed fails LOUDLY, it
-    never mis-orders). Row shape CHANGES to (type, bucket_ts, open,
-    high, low, close, n_events). One map-side-combinable hash
-    aggregate: the shuffle is candle-sized, never sample-sized.
-    Parameters: typeColumn ('event_type'), tsColumn ('ts'),
-    valueColumn ('value'), orderColumn ('event_id'), bucket ('1 day')."""
-    from etl_load_spark.operators.timeseries import ohlc
-    return ohlc(df, type_col=p.get("typeColumn", "event_type"),
-                ts_col=p.get("tsColumn", "ts"),
-                value_col=p.get("valueColumn", "value"),
-                order_col=p.get("orderColumn", "event_id"),
-                bucket=p.get("bucket", "1 day"))
-
-
-def _time_weighted_avg_transform(df: DataFrame, p: dict) -> DataFrame:
-    """Declarative time-weighted average (operators/timeseries.
-    time_weighted_avg — q175): each sample weighted by how long it HELD
-    (the in-bucket LOCF integral), so burst sampling cannot bias the
-    bucket mean the way a plain average can. Row shape CHANGES to
-    (key, bucket_ts, n_samples, twa). By default the contract is
-    self-contained per bucket; ``carryIn: true`` selects the
-    Timescale interpolated_average contract (q176 — the previous
-    bucket's value weights the bucket-start span). Parameters:
-    keyColumn ('user_id'), tsColumn ('ts'), valueColumn ('value'),
-    orderColumn ('event_id'), bucket ('1 day'), carryIn (false),
-    hotSplit (interval string; with carryIn, parallelizes a dominant
-    series' cross-bucket carry per time slice — identical results)."""
-    from etl_load_spark.operators.timeseries import time_weighted_avg
-    return time_weighted_avg(df, key_col=p.get("keyColumn", "user_id"),
-                             ts_col=p.get("tsColumn", "ts"),
-                             value_col=p.get("valueColumn", "value"),
-                             order_col=p.get("orderColumn", "event_id"),
-                             bucket=p.get("bucket", "1 day"),
-                             carry_in=bool(p.get("carryIn", False)),
-                             hot_split=p.get("hotSplit"))
-
-
-def _state_durations_transform(df: DataFrame, p: dict) -> DataFrame:
-    """Declarative time-in-state rollup (operators/timeseries.
-    state_durations — q177): per (key, bucket, state) the
-    integer-millisecond hold time (in-bucket LOCF), the entry count
-    and the sample count. Row shape CHANGES to (key, bucket_ts,
-    state, held_ms, n_entries, n_samples). Self-contained per bucket
-    by default; ``carryIn: true`` selects the Timescale
-    interpolated_duration_in contract (q180 — the previous recorded
-    state holds from the bucket start to the first sample).
-    Parameters: keyColumn ('user_id'), tsColumn ('ts'),
-    stateColumn ('event_type'), orderColumn ('event_id'),
-    bucket ('1 day'), carryIn (false), hotSplit (interval string;
-    with carryIn, parallelizes a dominant series' cross-bucket carry
-    per time slice — identical results)."""
-    from etl_load_spark.operators.timeseries import state_durations
-    return state_durations(df, key_col=p.get("keyColumn", "user_id"),
-                           ts_col=p.get("tsColumn", "ts"),
-                           state_col=p.get("stateColumn", "event_type"),
-                           order_col=p.get("orderColumn", "event_id"),
-                           bucket=p.get("bucket", "1 day"),
-                           carry_in=bool(p.get("carryIn", False)),
-                           hot_split=p.get("hotSplit"))
-
-
-def _heartbeat_uptime_transform(df: DataFrame, p: dict) -> DataFrame:
-    """Declarative heartbeat/liveness rollup (operators/timeseries.
-    heartbeat_uptime — q178): each row is a heartbeat keeping its
-    series live for ``tolerance``; per (key, bucket) the beat count,
-    the uptime (union of tolerance-clipped in-bucket live intervals,
-    integer ms) and the mid-bucket outage count. Row shape CHANGES to
-    (key, bucket_ts, n_beats, uptime_ms, n_gaps). Self-contained per
-    bucket by default; ``carryIn: true`` selects the Timescale
-    interpolated_uptime contract (q181 — the previous beat's tolerance
-    window extends across the bucket boundary). Parameters:
-    keyColumn ('user_id'), tsColumn ('ts'), orderColumn ('event_id'),
-    bucket ('1 day'), tolerance ('15 minutes'), carryIn (false),
-    hotSplit (interval string; with carryIn, parallelizes a dominant
-    series' cross-bucket carry per time slice — identical results),
-    emitDowntime (false; appends downtime_ms = bucket width − uptime,
-    the Timescale (interpolated_)downtime complement)."""
-    from etl_load_spark.operators.timeseries import heartbeat_uptime
-    return heartbeat_uptime(df, key_col=p.get("keyColumn", "user_id"),
-                            ts_col=p.get("tsColumn", "ts"),
-                            order_col=p.get("orderColumn", "event_id"),
-                            bucket=p.get("bucket", "1 day"),
-                            tolerance=p.get("tolerance", "15 minutes"),
-                            carry_in=bool(p.get("carryIn", False)),
-                            hot_split=p.get("hotSplit"),
-                            emit_downtime=bool(p.get("emitDowntime",
-                                                     False)))
-
-
-def _trend_transform(df: DataFrame, p: dict) -> DataFrame:
-    """Declarative per-bucket least-squares trend (operators/
-    timeseries.trend — q183): the OLS slope of value over time within
-    each (key, bucket), in value units per second at 4 exact decimals
-    (pure integer sums, sign-split half-up quotient); NULL when the
-    bucket has zero time variance. Row shape CHANGES to (key,
-    bucket_ts, n_samples, slope_per_sec). One map-side-combinable
-    hash aggregate — the shuffle is trend-sized. Parameters:
-    keyColumn ('user_id'), tsColumn ('ts'), valueColumn ('value'),
-    bucket ('1 day')."""
-    from etl_load_spark.operators.timeseries import trend
-    return trend(df, key_col=p.get("keyColumn", "user_id"),
-                 ts_col=p.get("tsColumn", "ts"),
-                 value_col=p.get("valueColumn", "value"),
-                 bucket=p.get("bucket", "1 day"))
-
-
-def _instant_rate_transform(df: DataFrame, p: dict) -> DataFrame:
-    """Declarative instant rate (operators/timeseries.instant_rate —
-    q184, Prometheus irate): per (key, bucket) the rate between the
-    bucket's LAST TWO samples in value/second at 4 exact decimals,
-    Prometheus reset rule on the final step; NULL under two samples or
-    a zero time delta. Row shape CHANGES to (key, bucket_ts,
-    n_samples, irate_per_sec). One exchange — lag window and max_by
-    rollup share (key, bucket). Parameters: keyColumn ('user_id'),
-    tsColumn ('ts'), valueColumn ('value'), orderColumn ('event_id'),
-    bucket ('1 day')."""
-    from etl_load_spark.operators.timeseries import instant_rate
-    return instant_rate(df, key_col=p.get("keyColumn", "user_id"),
-                        ts_col=p.get("tsColumn", "ts"),
-                        value_col=p.get("valueColumn", "value"),
-                        order_col=p.get("orderColumn", "event_id"),
-                        bucket=p.get("bucket", "1 day"))
-
-
-def _value_histogram_transform(df: DataFrame, p: dict) -> DataFrame:
-    """Declarative per-bucket value histogram (operators/timeseries.
-    value_histogram — q185, Timescale histogram()): nbins equal
-    cent-exact bins over [lo, hi) plus underflow bin 0 and overflow
-    bin nbins+1, one row per non-empty (key, bucket, bin) with its
-    count. Row shape CHANGES to (key, bucket_ts, bin, n_samples). One
-    map-side-combinable hash aggregate — the shuffle is
-    histogram-sized. Parameters: keyColumn ('user_id'), tsColumn
-    ('ts'), valueColumn ('value'), bucket ('1 day'), lo (0.0),
-    hi (100.0), nbins (10)."""
-    from etl_load_spark.operators.timeseries import value_histogram
-    return value_histogram(df, key_col=p.get("keyColumn", "user_id"),
-                           ts_col=p.get("tsColumn", "ts"),
-                           value_col=p.get("valueColumn", "value"),
-                           bucket=p.get("bucket", "1 day"),
-                           lo=float(p.get("lo", 0.0)),
-                           hi=float(p.get("hi", 100.0)),
-                           nbins=int(p.get("nbins", 10)))
-
-
-def _delta_transform(df: DataFrame, p: dict) -> DataFrame:
-    """Declarative per-bucket gauge delta (operators/timeseries.delta —
-    q186, Timescale delta()): last value − first value over the padded
-    (epoch_micros, order) key, exact integer cents. Row shape CHANGES
-    to (key, bucket_ts, n_samples, delta). One map-side-combinable
-    min_by/max_by aggregate. Parameters: keyColumn ('user_id'),
-    tsColumn ('ts'), valueColumn ('value'), orderColumn ('event_id'),
-    bucket ('1 day')."""
-    from etl_load_spark.operators.timeseries import delta
-    return delta(df, key_col=p.get("keyColumn", "user_id"),
-                 ts_col=p.get("tsColumn", "ts"),
-                 value_col=p.get("valueColumn", "value"),
-                 order_col=p.get("orderColumn", "event_id"),
-                 bucket=p.get("bucket", "1 day"))
-
-
-def _value_stats_transform(df: DataFrame, p: dict) -> DataFrame:
-    """Declarative per-bucket exact mean/variance (operators/
-    timeseries.value_stats — q187, Timescale stats_agg): 4-decimal
-    fixed-point mean (sign-split half-up) and sample variance
-    S/(n(n−1)) from three integer sums; variance NULL under two
-    samples. Row shape CHANGES to (key, bucket_ts, n_samples, mean,
-    variance). One map-side-combinable aggregate. Parameters:
-    keyColumn ('user_id'), tsColumn ('ts'), valueColumn ('value'),
-    bucket ('1 day')."""
-    from etl_load_spark.operators.timeseries import value_stats
-    return value_stats(df, key_col=p.get("keyColumn", "user_id"),
-                       ts_col=p.get("tsColumn", "ts"),
-                       value_col=p.get("valueColumn", "value"),
-                       bucket=p.get("bucket", "1 day"))
-
-
-def _changes_transform(df: DataFrame, p: dict) -> DataFrame:
-    """Declarative per-bucket change count (operators/timeseries.
-    changes — q188, Prometheus changes()): consecutive differing cents
-    over the (ts, order) total order; the bucket's first sample is a
-    baseline. Row shape CHANGES to (key, bucket_ts, n_samples,
-    n_changes). The in-bucket lag window and the rollup share one
-    (key, bucket_ts) exchange. Parameters: keyColumn ('user_id'),
-    tsColumn ('ts'), valueColumn ('value'), orderColumn ('event_id'),
-    bucket ('1 day')."""
-    from etl_load_spark.operators.timeseries import changes
-    return changes(df, key_col=p.get("keyColumn", "user_id"),
-                   ts_col=p.get("tsColumn", "ts"),
-                   value_col=p.get("valueColumn", "value"),
-                   order_col=p.get("orderColumn", "event_id"),
-                   bucket=p.get("bucket", "1 day"))
-
-
-def _value_topk_transform(df: DataFrame, p: dict) -> DataFrame:
-    """Declarative per-bucket top-k frequent values (operators/
-    timeseries.value_topk — q189, ClickHouse topK exact form): one row
-    per (key, bucket, rank ≤ k) with the value and its count,
-    deterministic (count DESC, value ASC) order. Row shape CHANGES to
-    (key, bucket_ts, rank, value, n_occurrences). Parameters:
-    keyColumn ('user_id'), tsColumn ('ts'), valueColumn ('value'),
-    bucket ('1 day'), k (3)."""
-    from etl_load_spark.operators.timeseries import value_topk
-    return value_topk(df, key_col=p.get("keyColumn", "user_id"),
-                      ts_col=p.get("tsColumn", "ts"),
-                      value_col=p.get("valueColumn", "value"),
-                      bucket=p.get("bucket", "1 day"),
-                      k=int(p.get("k", 3)))
-
-
-def _lttb_transform(df: DataFrame, p: dict) -> DataFrame:
-    """Declarative LTTB visual downsampling (operators/timeseries.lttb
-    — q179): per series keep exactly ``resolution`` points (first,
-    last, and per equal-count bucket the largest-triangle point vs the
-    previous selection and the next bucket's centroid); series with
-    ≤ resolution points pass through. Row shape: a subset of
-    (key, ts, order, value). The selection is sequential per series —
-    a grouped Arrow kernel (the one Pandas-backed stage in the
-    hypertable family; the task memory bound is one series' points,
-    pre-slice upstream for unbounded series — maxPointsPerSeries
-    turns that contract into a loud in-kernel guard). Parameters:
-    keyColumn ('user_id'), tsColumn ('ts'), valueColumn ('value'),
-    orderColumn ('event_id'), resolution (12),
-    maxPointsPerSeries (int, optional)."""
-    from etl_load_spark.operators.timeseries import lttb
-    mps = p.get("maxPointsPerSeries")
-    return lttb(df, key_col=p.get("keyColumn", "user_id"),
-                ts_col=p.get("tsColumn", "ts"),
-                value_col=p.get("valueColumn", "value"),
-                order_col=p.get("orderColumn", "event_id"),
-                resolution=int(p.get("resolution", 12)),
-                max_points_per_series=None if mps is None else int(mps))
-
-
-def _hard_negatives_transform(df: DataFrame, spark: SparkSession,
-                              spec: JobSpec) -> DataFrame:
+def _hard_negatives_transform(df: DataFrame, p: dict,
+                              source) -> DataFrame:
     """Declarative hard-negative mining (operators/similarity.
     hard_negatives — q156): for each anchor, the k most-similar
     corpus vectors with a DIFFERENT label, plus the best same-label
@@ -1110,11 +782,9 @@ def _hard_negatives_transform(df: DataFrame, spark: SparkSession,
     k (5), idColumn ('vec_id'), vectorColumn ('embedding'),
     labelColumn ('label'), anchorPredicate, dupCeiling (0.999)."""
     from etl_load_spark.operators.similarity import hard_negatives
-    from etl_load_spark.sources.registry import read_source
 
-    p = spec.transformation.parameters or {}
-    if "anchors" in spec.extra_sources:
-        anchors = read_source(spark, spec.extra_sources["anchors"])
+    anchors = source("anchors")
+    if anchors is not None:
         if p.get("anchorPredicate"):
             anchors = anchors.filter(p["anchorPredicate"])
     elif p.get("anchorPredicate"):
@@ -1131,8 +801,7 @@ def _hard_negatives_transform(df: DataFrame, spark: SparkSession,
                           dup_ceiling=float(p.get("dupCeiling", 0.999)))
 
 
-def _asof_join_transform(df: DataFrame, spark: SparkSession,
-                         spec: JobSpec) -> DataFrame:
+def _asof_join_transform(df: DataFrame, p: dict, source) -> DataFrame:
     """Declarative backward as-of join (operators/asof_join — q51):
     attach to each row the most recent ``extraSources.<rightSource>``
     row at or before its timestamp, per key. Parameters: rightSource
@@ -1146,15 +815,13 @@ def _asof_join_transform(df: DataFrame, spark: SparkSession,
     ONE window over (key, ts) — a single shuffle, no join operator,
     no candidate blow-up on hot keys (asof_join module docstring)."""
     from etl_load_spark.operators.asof_join import asof_join
-    from etl_load_spark.sources.registry import read_source
-    p = spec.transformation.parameters or {}
     src_key = p.get("rightSource", "right")
-    if src_key not in spec.extra_sources:
+    right = source(src_key)
+    if right is None:
         raise ValueError(
             f"ASOF_JOIN requires extraSources.{src_key!r} (the right "
             "side to attach); set parameters.rightSource to pick a "
             "different extraSources key")
-    right = read_source(spark, spec.extra_sources[src_key])
     tol = None
     if p.get("tolerance"):
         from etl_load_spark.operators.timeseries import validate_bucket
@@ -1166,214 +833,309 @@ def _asof_join_transform(df: DataFrame, spark: SparkSession,
                      tolerance=tol, how=p.get("how", "left"))
 
 
-_CORPUS_TRANSFORMS = {
-    "PASSAGE_DEDUP": _passage_dedup_transform,
-    "QUALITY_FILTER": _quality_filter_transform,
-    "MIXTURE_SAMPLE": _mixture_sample_transform,
-    "QUALITY_CLASSIFIER": _quality_classifier_transform,
-    "SEMANTIC_DEDUP": _semantic_dedup_transform,
-    "CLUSTER_BALANCE": _cluster_balance_transform,
-    "CHUNK_DOCUMENTS": _chunk_documents_transform,
-    "LM_SURPRISAL": _lm_surprisal_transform,
-    "CROSS_SOURCE_DEDUP": _cross_source_dedup_transform,
-    "TOKEN_BUDGET": _token_budget_transform,
-    "ASSIGN_SHARDS": _assign_shards_transform,
-    "SEQUENCE_PACK": _sequence_pack_transform,
-    "QUANTIZE_EMBEDDINGS": _quantize_embeddings_transform,
-    "STRATIFIED_SAMPLE": _stratified_sample_transform,
-    "URL_CANONICALIZE": _url_canonicalize_transform,
-    "MARKUP_STRIP": _markup_strip_transform,
-    "ASSIGN_SPLIT": _assign_split_transform,
-    "PRIORITY_SAMPLE": _priority_sample_transform,
-    "QUOTA_SAMPLE": _quota_sample_transform,
-    "WINDOW_MINHASH_DEDUP": _window_minhash_dedup_transform,
-    "GAPFILL": _gapfill_transform,
-    "COUNTER_RATE": _counter_rate_transform,
-    "OHLC": _ohlc_transform,
-    "TIME_WEIGHTED_AVG": _time_weighted_avg_transform,
-    "STATE_DURATIONS": _state_durations_transform,
-    "HEARTBEAT_UPTIME": _heartbeat_uptime_transform,
-    "LTTB": _lttb_transform,
-    "TREND": _trend_transform,
-    "INSTANT_RATE": _instant_rate_transform,
-    "VALUE_HISTOGRAM": _value_histogram_transform,
-    "DELTA": _delta_transform,
-    "VALUE_STATS": _value_stats_transform,
-    "CHANGES": _changes_transform,
-    "VALUE_TOPK": _value_topk_transform,
+#: spec parameters an _Op coerces; every other parameter passes as given
+_COERCE = {"bucketSeconds": int, "maxPointsPerSeries": int, "nbins": int,
+           "k": int, "resolution": int, "lo": float, "hi": float,
+           "carryIn": bool, "emitDowntime": bool}
+
+
+@dataclass(frozen=True)
+class _Op:
+    """A stage that IS one operator, ``etl_load_spark.<module>.<name>``,
+    called with the spec's parameters as its keyword arguments: camelCase
+    → snake_case, ``xColumn`` → ``x_col`` (keyColumn → key_col, carryIn →
+    carry_in, maxPointsPerSeries → max_points_per_series). Only the
+    parameters the spec gives AND the operator takes are passed, so each
+    default lives once — in the operator signature."""
+    module: str
+    name: str
+
+    def signature(self) -> tuple[Callable, dict]:
+        """The operator and its parameters after the input DataFrame."""
+        mod = importlib.import_module(f"etl_load_spark.{self.module}")
+        fn = getattr(mod, self.name)
+        return fn, dict(list(inspect.signature(fn).parameters.items())[1:])
+
+    def kwargs(self, p: dict) -> dict:
+        _, params = self.signature()
+        kw = {}
+        for k, v in p.items():
+            arg = re.sub(r"(?<=[a-z0-9])([A-Z])", r"_\1",
+                         re.sub(r"Column$", "Col", k)).lower()
+            if arg in params:
+                cast = _COERCE.get(k)
+                kw[arg] = cast(v) if cast and v is not None else v
+        return kw
+
+    def __call__(self, df: DataFrame, p: dict, source=None) -> DataFrame:
+        fn, _ = self.signature()
+        return fn(df, **self.kwargs(p))
+
+
+@dataclass(frozen=True)
+class _Stage:
+    """One transformation type. ``batch(df, parameters, source)`` builds
+    the stage — ``source(name)`` reads ``extraSources[name]`` (None when
+    absent). ``stream`` is its form on a streaming job: None = ``batch``
+    is stream-safe; a string = batch-only, the refusal text after
+    "is batch-only"; an _Op = the watermark twin. ``key`` = a rollup's
+    full group key (operator arguments resolve from the spec) — what the
+    update-mode upsert merges micro-batches on."""
+    batch: Callable
+    stream: _Op | str | None = None
+    key: tuple[str, ...] = ()
+
+
+_TS, _SW = "operators.timeseries", "streaming.windows"
+
+#: Every built-in transformation.type except the NONE / PYTHON_SCRIPT
+#: hooks, declared once. Streaming forms: per-row / pure-projection
+#: stages run unchanged on a stream; multi-stage stateful plans are not
+#: expressible as ONE streaming query, so they refuse with the
+#: streaming-native alternative instead of Spark's output-mode error;
+#: the pure-aggregate rollups stream as their streaming/windows.py twins
+#: — the identical aggregation minus the batch output sort, state
+#: bounded by the watermark (the twin's ``watermark`` parameter).
+#: OHLC/TREND/VALUE_HISTOGRAM/DELTA/VALUE_STATS are one watermarked
+#: aggregate; STATE_DURATIONS/HEARTBEAT_UPTIME/TIME_WEIGHTED_AVG/CHANGES/
+#: INSTANT_RATE run ONE watermarked collect_list aggregation plus a
+#: stateless per-bucket fold (the batch lead/lag replayed inside the
+#: sorted sample array), non-carry form only. With a file destination use
+#: streaming.output_mode=update — the sink materializes via the
+#: continuous-aggregate upsert keyed on ``key``
+#: (sources/writers.write_stream_sink).
+STAGES: dict[str, _Stage] = {
+    "SCD2_MERGE": _Stage(_scd2_transform),
+    "CDC_SCD2_APPLY": _Stage(_cdc_scd2_transform, (
+        " (version bounding needs the whole key group); land the feed, "
+        "then apply each landed batch downstream")),
+    "PASSAGE_DEDUP": _Stage(_passage_dedup_transform, (
+        "; streaming.windows.stream_block_dedup (checkpointed "
+        "first-occurrence block filter) and reassemble documents in a "
+        "downstream batch job")),
+    "QUALITY_FILTER": _Stage(_quality_filter_transform),
+    "MIXTURE_SAMPLE": _Stage(_mixture_sample_transform),
+    "QUALITY_CLASSIFIER": _Stage(_quality_classifier_transform, (
+        "; score incrementally with a watermarked aggregation, or run the "
+        "classifier as a downstream batch job over the landed stream")),
+    "SEMANTIC_DEDUP": _Stage(_semantic_dedup_transform, (
+        "; dedup each landed increment in a downstream batch job (k-means "
+        "blocking needs a corpus snapshot)")),
+    "DECONTAMINATE": _Stage(_decontaminate_transform, (
+        "; the bloom probe and verify join are stream-safe map-side "
+        "stages, but the per-document shared-n-gram aggregation needs a "
+        "landed batch pass — land the stream, then run DECONTAMINATE "
+        "downstream")),
+    "CLUSTER_BALANCE": _Stage(_cluster_balance_transform, (
+        "; anchor fitting and cluster counts need a corpus snapshot; fit "
+        "anchors offline, then apply anchor_assign (a map-side "
+        "projection) in the stream and balance in a downstream batch "
+        "job")),
+    "CHUNK_DOCUMENTS": _Stage(_chunk_documents_transform),
+    "LM_SURPRISAL": _Stage(_lm_surprisal_transform, (
+        "; the bigram count table needs a corpus snapshot; train offline "
+        "with operators/text.bigram_model, then score with "
+        "score_with_bigram_model inside foreachBatch (a stream-safe "
+        "stream-static join feeding a per-micro-batch reduction)")),
+    "CROSS_SOURCE_DEDUP": _Stage(_cross_source_dedup_transform, (
+        "; survivor choice needs the whole content group; dedup each "
+        "landed increment in a downstream batch job, or use "
+        "streaming.windows.stream_block_dedup for checkpointed "
+        "first-seen-wins without source preference")),
+    "TOKEN_BUDGET": _Stage(_token_budget_transform, (
+        "; the running token total is corpus-global; land the stream, "
+        "then realize the budget in a downstream batch job (ASSIGN_SHARDS "
+        "is the stream-safe layout stage)")),
+    "ASSIGN_SHARDS": _Stage(_assign_shards_transform),
+    "SEQUENCE_PACK": _Stage(_sequence_pack_transform, (
+        "; the packed stream's offsets are a corpus-global prefix sum; "
+        "land the stream, then pack in a downstream batch job "
+        "(ASSIGN_SHARDS is the stream-safe layout stage)")),
+    "INCREMENTAL_DEDUP": _Stage(_incremental_dedup_transform, (
+        " (the within-batch survivor needs the whole content group); use "
+        "streaming.windows.stream_content_dedup for checkpointed "
+        "first-seen-wins content admission on a live stream "
+        "(stream-static anti join against the admitted index + stateful "
+        "in-stream dedup), or land the stream and admit each landed "
+        "batch downstream")),
+    "IMPORTANCE_RESAMPLE": _Stage(_importance_resample_transform, (
+        " (the raw-corpus feature histogram is corpus-global); train the "
+        "histograms offline, then score the stream with a broadcast join "
+        "against the frozen bucket-score table")),
+    "QUANTIZE_EMBEDDINGS": _Stage(_quantize_embeddings_transform),
+    "STRATIFIED_SAMPLE": _Stage(_stratified_sample_transform, (
+        "; the minority-stratum size is corpus-global; land the stream, "
+        "then balance in a downstream batch job (MIXTURE_SAMPLE is the "
+        "stream-safe fixed-rate alternative)")),
+    "ASSIGN_SPLIT": _Stage(_assign_split_transform),
+    "MARKUP_STRIP": _Stage(_markup_strip_transform),
+    "URL_CANONICALIZE": _Stage(_url_canonicalize_transform),
+    "PRIORITY_SAMPLE": _Stage(_priority_sample_transform, (
+        "; the exact-size cut is a corpus-global top-k; land the stream, "
+        "then sample the landed batch downstream (MIXTURE_SAMPLE is the "
+        "stream-safe fixed-rate alternative)")),
+    "QUOTA_SAMPLE": _Stage(_quota_sample_transform, (
+        "; per-stratum exact sizes are corpus-global top-k cuts; land the "
+        "stream, then sample the landed batch downstream (MIXTURE_SAMPLE "
+        "is the stream-safe fixed-rate alternative)")),
+    "HARD_NEGATIVES": _Stage(_hard_negatives_transform, (
+        " (the per-anchor top-k and best-positive max need the whole "
+        "corpus snapshot); land the stream, then mine each landed "
+        "snapshot downstream")),
+    "WINDOW_MINHASH_DEDUP": _Stage(_window_minhash_dedup_transform, (
+        "; the banded LSH self-join and exact verify need a corpus "
+        "snapshot; land the stream, then dedup each landed batch "
+        "downstream (streaming.windows.stream_content_dedup is the "
+        "stream-safe exact-content alternative)")),
+    "ASOF_JOIN": _Stage(_asof_join_transform, (
+        " (the union-window argmax needs each key's ordered history); for "
+        "bounded-lookback stream enrichment use "
+        "streaming.windows.stream_interval_join, or land the stream and "
+        "enrich each landed batch downstream")),
+
+    # ── time-series rollups: each stage IS its operators/timeseries
+    # function (see _Op for the parameter renaming; the operator
+    # signature holds every default). Common parameters: keyColumn,
+    # tsColumn, valueColumn, orderColumn (the deterministic tie-break),
+    # bucket (a day-time interval string). Timestamps and order ids must
+    # be non-negative where the padded (epoch_micros, order) key orders
+    # samples; a violating feed fails LOUDLY, it never mis-orders.
+
+    # q172 gap fill: bucket-resample a (key, ts, value) feed onto the
+    # dense global bucket grid; the actual per-bucket average plus LOCF
+    # and linear-interpolation fills with the Timescale edge contract
+    # (leading buckets NULL for both fills; trailing buckets carry LOCF
+    # only). Output (key, bucket_ts, val, locf_val, interp_val). Values
+    # must be non-negative (exact fixed-point half-up arithmetic is
+    # unsigned).
+    "GAPFILL": _Stage(_Op(_TS, "gapfill"), (
+        "; the dense grid bounds and the LOCF/interpolation windows are "
+        "feed-global; run the streaming rollup "
+        "(streaming.windows.time_bucket_rollup) to land bucket aggregates "
+        "incrementally, then gap-fill the landed table downstream")),
+    # q173 counter increase/rate with reset detection: per-series deltas
+    # ordered by (tsColumn, orderColumn), a decrease = counter restart
+    # (the post-reset value is the step), rolled up to (key, bucket_ts,
+    # n_samples, n_resets, increase, rate_per_sec). Values must be
+    # non-negative. bucketSeconds = the rate denominator (defaults to the
+    # parsed bucket width, so it cannot silently drift from the bucket —
+    # set it only to rate against a different horizon); hotSplit (an
+    # interval string, e.g. '1 day') engages the parallel-prefix stitch
+    # for feeds where one series dwarfs the rest — identical results,
+    # the per-series sort parallelizes per time slice.
+    "COUNTER_RATE": _Stage(_Op(_TS, "counter_rate"), (
+        "; sample-to-sample lag needs each series' full ordered history; "
+        "keep the last sample per series in keyed state "
+        "(streaming.stateful, applyInPandasWithState) to emit deltas "
+        "incrementally, or land the stream and roll up each landed batch "
+        "downstream")),
+    # q174 OHLC / candlestick: per (typeColumn, bucket) open/high/low/
+    # close and the sample count, open/close deterministic via the
+    # raise-guarded padded (epoch_micros, orderColumn) key. Output (type,
+    # bucket_ts, open, high, low, close, n_events). One map-side-
+    # combinable hash aggregate: the shuffle is candle-sized.
+    "OHLC": _Stage(_Op(_TS, "ohlc"), _Op(_SW, "streaming_ohlc"),
+                   ("type_col", "bucket_ts")),
+    # q175 time-weighted average: each sample weighted by how long it
+    # HELD (the in-bucket LOCF integral), so burst sampling cannot bias
+    # the bucket mean. Output (key, bucket_ts, n_samples, twa).
+    # Self-contained per bucket by default; carryIn: true selects the
+    # Timescale interpolated_average contract (q176 — the previous
+    # bucket's value weights the bucket-start span); hotSplit (interval
+    # string; with carryIn, parallelizes a dominant series' cross-bucket
+    # carry per time slice — identical results).
+    "TIME_WEIGHTED_AVG": _Stage(
+        _Op(_TS, "time_weighted_avg"),
+        _Op(_SW, "streaming_time_weighted_avg"), ("key_col", "bucket_ts")),
+    # q177 time in state: per (key, bucket, stateColumn) the integer-ms
+    # hold time (in-bucket LOCF), the entry count and the sample count.
+    # Output (key, bucket_ts, state, held_ms, n_entries, n_samples).
+    # carryIn: true selects the Timescale interpolated_duration_in
+    # contract (q180 — the previous recorded state holds from the bucket
+    # start to the first sample); hotSplit as for TIME_WEIGHTED_AVG.
+    "STATE_DURATIONS": _Stage(
+        _Op(_TS, "state_durations"), _Op(_SW, "streaming_state_durations"),
+        ("key_col", "bucket_ts", "state_col")),
+    # q178 heartbeat liveness: each row is a heartbeat keeping its series
+    # live for ``tolerance``; per (key, bucket) the beat count, the
+    # uptime (union of tolerance-clipped in-bucket live intervals,
+    # integer ms) and the mid-bucket outage count. Output (key,
+    # bucket_ts, n_beats, uptime_ms, n_gaps). carryIn: true selects the
+    # Timescale interpolated_uptime contract (q181 — the previous beat's
+    # tolerance window extends across the bucket boundary); hotSplit as
+    # for TIME_WEIGHTED_AVG; emitDowntime appends downtime_ms = bucket
+    # width − uptime (the Timescale (interpolated_)downtime complement).
+    "HEARTBEAT_UPTIME": _Stage(
+        _Op(_TS, "heartbeat_uptime"), _Op(_SW, "streaming_heartbeat_uptime"),
+        ("key_col", "bucket_ts")),
+    # q179 LTTB visual downsampling: per series keep exactly
+    # ``resolution`` points (first, last, and per equal-count bucket the
+    # largest-triangle point vs the previous selection and the next
+    # bucket's centroid); series with ≤ resolution points pass through.
+    # Output: a subset of (key, ts, order, value). Sequential per series
+    # — a grouped Arrow kernel (the one Pandas-backed stage in the
+    # family; the task memory bound is one series' points, pre-slice
+    # upstream for unbounded series — maxPointsPerSeries turns that
+    # contract into a loud in-kernel guard).
+    "LTTB": _Stage(_Op(_TS, "lttb"), (
+        "; the largest-triangle selection is sequential over each "
+        "series' complete point set; land the stream, then downsample "
+        "each landed slice downstream (the per-bucket rollups — OHLC, "
+        "TIME_WEIGHTED_AVG — are the incremental alternatives)")),
+    # q183 least-squares trend: the OLS slope of value over time within
+    # each (key, bucket), value units per second at 4 exact decimals
+    # (pure integer sums, sign-split half-up quotient); NULL when the
+    # bucket has zero time variance. Output (key, bucket_ts, n_samples,
+    # slope_per_sec). One map-side-combinable hash aggregate.
+    "TREND": _Stage(_Op(_TS, "trend"), _Op(_SW, "streaming_trend"),
+                    ("key_col", "bucket_ts")),
+    # q184 instant rate (Prometheus irate): per (key, bucket) the rate
+    # between the bucket's LAST TWO samples in value/second at 4 exact
+    # decimals, Prometheus reset rule on the final step; NULL under two
+    # samples or a zero time delta. Output (key, bucket_ts, n_samples,
+    # irate_per_sec). One exchange — lag window and max_by rollup share
+    # (key, bucket).
+    "INSTANT_RATE": _Stage(
+        _Op(_TS, "instant_rate"), _Op(_SW, "streaming_instant_rate"),
+        ("key_col", "bucket_ts")),
+    # q185 value histogram (Timescale histogram()): nbins equal
+    # cent-exact bins over [lo, hi) plus underflow bin 0 and overflow bin
+    # nbins+1, one row per non-empty (key, bucket, bin). Output (key,
+    # bucket_ts, bin, n_samples). One map-side-combinable hash aggregate.
+    "VALUE_HISTOGRAM": _Stage(
+        _Op(_TS, "value_histogram"), _Op(_SW, "streaming_value_histogram"),
+        ("key_col", "bucket_ts", "bin")),
+    # q186 gauge delta (Timescale delta()): last − first value over the
+    # padded (epoch_micros, order) key, exact integer cents. Output (key,
+    # bucket_ts, n_samples, delta). One min_by/max_by aggregate.
+    "DELTA": _Stage(_Op(_TS, "delta"), _Op(_SW, "streaming_delta"),
+                    ("key_col", "bucket_ts")),
+    # q187 exact mean/variance (Timescale stats_agg): 4-decimal
+    # fixed-point mean (sign-split half-up) and sample variance
+    # S/(n(n−1)) from three integer sums; variance NULL under two
+    # samples. Output (key, bucket_ts, n_samples, mean, variance).
+    "VALUE_STATS": _Stage(
+        _Op(_TS, "value_stats"), _Op(_SW, "streaming_value_stats"),
+        ("key_col", "bucket_ts")),
+    # q188 change count (Prometheus changes()): consecutive differing
+    # cents over the (ts, order) total order; the bucket's first sample
+    # is a baseline. Output (key, bucket_ts, n_samples, n_changes). The
+    # in-bucket lag window and the rollup share one exchange.
+    "CHANGES": _Stage(_Op(_TS, "changes"), _Op(_SW, "streaming_changes"),
+                      ("key_col", "bucket_ts")),
+    # q189 top-k frequent values (ClickHouse topK, exact): one row per
+    # (key, bucket, rank ≤ k) with the value and its count, deterministic
+    # (count DESC, value ASC) order. Output (key, bucket_ts, rank, value,
+    # n_occurrences).
+    "VALUE_TOPK": _Stage(_Op(_TS, "value_topk"), (
+        "; the frequency ranking is two chained aggregations (per-value "
+        "counts, then the rank cut) — not ONE streaming query; land the "
+        "stream, then rank each landed batch downstream (VALUE_HISTOGRAM "
+        "is the stream-safe distribution rollup)")),
 }
 
-
-def _streaming_ohlc_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_ohlc
-    return streaming_ohlc(df, type_col=p.get("typeColumn", "event_type"),
-                          ts_col=p.get("tsColumn", "ts"),
-                          value_col=p.get("valueColumn", "value"),
-                          order_col=p.get("orderColumn", "event_id"),
-                          bucket=p.get("bucket", "1 day"),
-                          watermark=p.get("watermark", "30 minutes"))
-
-
-def _streaming_trend_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_trend
-    return streaming_trend(df, key_col=p.get("keyColumn", "user_id"),
-                           ts_col=p.get("tsColumn", "ts"),
-                           value_col=p.get("valueColumn", "value"),
-                           bucket=p.get("bucket", "1 day"),
-                           watermark=p.get("watermark", "30 minutes"))
-
-
-def _streaming_value_histogram_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import (
-        streaming_value_histogram,
-    )
-    return streaming_value_histogram(
-        df, key_col=p.get("keyColumn", "user_id"),
-        ts_col=p.get("tsColumn", "ts"),
-        value_col=p.get("valueColumn", "value"),
-        bucket=p.get("bucket", "1 day"), lo=float(p.get("lo", 0.0)),
-        hi=float(p.get("hi", 100.0)), nbins=int(p.get("nbins", 10)),
-        watermark=p.get("watermark", "30 minutes"))
-
-
-def _streaming_state_durations_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_state_durations
-    if p.get("carryIn"):
-        raise ValueError(
-            "STATE_DURATIONS carryIn=true is batch-only on a stream: the "
-            "carried state is the previous bucket's last sample, which "
-            "the watermark has already evicted when the next bucket "
-            "opens — land the self-contained rollup incrementally, then "
-            "interpolate carries downstream (the batch operator's "
-            "carry_in=True over the landed table)")
-    if p.get("hotSplit"):
-        raise ValueError(
-            "STATE_DURATIONS hotSplit only applies to the batch carry "
-            "form (there is no per-key window to split on a stream — "
-            "the streaming twin is already per-bucket-parallel)")
-    return streaming_state_durations(
-        df, key_col=p.get("keyColumn", "user_id"),
-        ts_col=p.get("tsColumn", "ts"),
-        state_col=p.get("stateColumn", "event_type"),
-        order_col=p.get("orderColumn", "event_id"),
-        bucket=p.get("bucket", "1 day"),
-        watermark=p.get("watermark", "30 minutes"))
-
-
-def _streaming_heartbeat_uptime_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_heartbeat_uptime
-    if p.get("carryIn"):
-        raise ValueError(
-            "HEARTBEAT_UPTIME carryIn=true is batch-only on a stream: "
-            "the carried beat is the previous bucket's last sample, "
-            "which the watermark has already evicted when the next "
-            "bucket opens — land the self-contained rollup "
-            "incrementally, then interpolate carries downstream (the "
-            "batch operator's carry_in=True over the landed table)")
-    if p.get("hotSplit"):
-        raise ValueError(
-            "HEARTBEAT_UPTIME hotSplit only applies to the batch carry "
-            "form (there is no per-key window to split on a stream — "
-            "the streaming twin is already per-bucket-parallel)")
-    return streaming_heartbeat_uptime(
-        df, key_col=p.get("keyColumn", "user_id"),
-        ts_col=p.get("tsColumn", "ts"),
-        order_col=p.get("orderColumn", "event_id"),
-        bucket=p.get("bucket", "1 day"),
-        tolerance=p.get("tolerance", "15 minutes"),
-        emit_downtime=bool(p.get("emitDowntime", False)),
-        watermark=p.get("watermark", "30 minutes"))
-
-
-#: rollup stages with a STREAMING form (streaming/windows.py twins).
-#: OHLC/TREND/VALUE_HISTOGRAM are the identical pure aggregation with a
-#: watermark (round 11); STATE_DURATIONS/HEARTBEAT_UPTIME (round 12,
-#: non-carry only) run as ONE watermarked collect_list aggregation plus
-#: a stateless per-bucket fold — the batch lead/lag replayed inside the
-#: sorted sample array. On a streaming job these dispatch INSTEAD of
-#: the batch transform — same parameters plus `watermark`
-#: ('30 minutes'); the batch output sort is dropped (streams cannot
-#: sort), and a file destination materializes via the update-mode
-#: continuous-aggregate upsert (sources/writers.write_stream_sink).
-def _streaming_instant_rate_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_instant_rate
-    return streaming_instant_rate(
-        df, key_col=p.get("keyColumn", "user_id"),
-        ts_col=p.get("tsColumn", "ts"),
-        value_col=p.get("valueColumn", "value"),
-        order_col=p.get("orderColumn", "event_id"),
-        bucket=p.get("bucket", "1 day"),
-        watermark=p.get("watermark", "30 minutes"))
-
-
-def _streaming_twa_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import (
-        streaming_time_weighted_avg,
-    )
-    if p.get("carryIn"):
-        raise ValueError(
-            "TIME_WEIGHTED_AVG carryIn=true is batch-only on a stream: "
-            "the carried sample is the previous bucket's last row, "
-            "which the watermark has already evicted when the next "
-            "bucket opens — land the self-contained rollup "
-            "incrementally, then interpolate carries downstream (the "
-            "batch operator's carry_in=True over the landed table)")
-    if p.get("hotSplit"):
-        raise ValueError(
-            "TIME_WEIGHTED_AVG hotSplit only applies to the batch carry "
-            "form (there is no per-key window to split on a stream — "
-            "the streaming twin is already per-bucket-parallel)")
-    return streaming_time_weighted_avg(
-        df, key_col=p.get("keyColumn", "user_id"),
-        ts_col=p.get("tsColumn", "ts"),
-        value_col=p.get("valueColumn", "value"),
-        order_col=p.get("orderColumn", "event_id"),
-        bucket=p.get("bucket", "1 day"),
-        watermark=p.get("watermark", "30 minutes"))
-
-
-def _streaming_delta_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_delta
-    return streaming_delta(df, key_col=p.get("keyColumn", "user_id"),
-                           ts_col=p.get("tsColumn", "ts"),
-                           value_col=p.get("valueColumn", "value"),
-                           order_col=p.get("orderColumn", "event_id"),
-                           bucket=p.get("bucket", "1 day"),
-                           watermark=p.get("watermark", "30 minutes"))
-
-
-def _streaming_value_stats_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_value_stats
-    return streaming_value_stats(
-        df, key_col=p.get("keyColumn", "user_id"),
-        ts_col=p.get("tsColumn", "ts"),
-        value_col=p.get("valueColumn", "value"),
-        bucket=p.get("bucket", "1 day"),
-        watermark=p.get("watermark", "30 minutes"))
-
-
-def _streaming_changes_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_changes
-    return streaming_changes(df, key_col=p.get("keyColumn", "user_id"),
-                             ts_col=p.get("tsColumn", "ts"),
-                             value_col=p.get("valueColumn", "value"),
-                             order_col=p.get("orderColumn", "event_id"),
-                             bucket=p.get("bucket", "1 day"),
-                             watermark=p.get("watermark", "30 minutes"))
-
-
-_STREAMING_TWINS = {
-    "OHLC": _streaming_ohlc_twin,
-    "TREND": _streaming_trend_twin,
-    "VALUE_HISTOGRAM": _streaming_value_histogram_twin,
-    "STATE_DURATIONS": _streaming_state_durations_twin,
-    "HEARTBEAT_UPTIME": _streaming_heartbeat_uptime_twin,
-    "DELTA": _streaming_delta_twin,
-    "VALUE_STATS": _streaming_value_stats_twin,
-    "CHANGES": _streaming_changes_twin,
-    "INSTANT_RATE": _streaming_instant_rate_twin,
-    "TIME_WEIGHTED_AVG": _streaming_twa_twin,
-}
+#: every transformation.type apply_transformation accepts
+KNOWN_TYPES = ("NONE", "PYTHON_SCRIPT", *sorted(STAGES))
 
 
 def streaming_merge_keys(spec) -> list[str] | None:
@@ -1385,94 +1147,10 @@ def streaming_merge_keys(spec) -> list[str] | None:
     for non-rollup specs (a raw update-mode SQL aggregate declares
     destination.details.merge_keys itself)."""
     tr = getattr(spec, "transformation", None)
-    if tr is None or not tr.type:
+    stage = STAGES.get(tr.type.upper()) if tr and tr.type else None
+    if stage is None or not stage.key:
         return None
-    t = tr.type.upper()
-    p = tr.parameters or {}
-    if t == "OHLC":
-        return [p.get("typeColumn", "event_type"), "bucket_ts"]
-    if t == "TREND":
-        return [p.get("keyColumn", "user_id"), "bucket_ts"]
-    if t == "VALUE_HISTOGRAM":
-        return [p.get("keyColumn", "user_id"), "bucket_ts", "bin"]
-    if t == "STATE_DURATIONS":
-        return [p.get("keyColumn", "user_id"), "bucket_ts",
-                p.get("stateColumn", "event_type")]
-    if t in ("HEARTBEAT_UPTIME", "DELTA", "VALUE_STATS", "CHANGES",
-             "INSTANT_RATE", "TIME_WEIGHTED_AVG"):
-        return [p.get("keyColumn", "user_id"), "bucket_ts"]
-    return None
-
-#: stages whose plan needs multiple stateful stages — impossible as ONE
-#: streaming query; each error names the streaming-native alternative
-_BATCH_ONLY_TRANSFORMS = {
-    "PASSAGE_DEDUP": ("streaming.windows.stream_block_dedup (checkpointed "
-                      "first-occurrence block filter) and reassemble "
-                      "documents in a downstream batch job"),
-    "QUALITY_CLASSIFIER": ("score incrementally with a watermarked "
-                           "aggregation, or run the classifier as a "
-                           "downstream batch job over the landed stream"),
-    "SEMANTIC_DEDUP": ("dedup each landed increment in a downstream batch "
-                       "job (k-means blocking needs a corpus snapshot)"),
-    "CLUSTER_BALANCE": ("anchor fitting and cluster counts need a corpus "
-                        "snapshot; fit anchors offline, then apply "
-                        "anchor_assign (a map-side projection) in the "
-                        "stream and balance in a downstream batch job"),
-    "LM_SURPRISAL": ("the bigram count table needs a corpus snapshot; "
-                     "train offline with operators/text.bigram_model, "
-                     "then score with score_with_bigram_model inside "
-                     "foreachBatch (a stream-safe stream-static join "
-                     "feeding a per-micro-batch reduction)"),
-    "CROSS_SOURCE_DEDUP": ("survivor choice needs the whole content "
-                           "group; dedup each landed increment in a "
-                           "downstream batch job, or use "
-                           "streaming.windows.stream_block_dedup for "
-                           "checkpointed first-seen-wins without source "
-                           "preference"),
-    "TOKEN_BUDGET": ("the running token total is corpus-global; land the "
-                     "stream, then realize the budget in a downstream "
-                     "batch job (ASSIGN_SHARDS is the stream-safe layout "
-                     "stage)"),
-    "SEQUENCE_PACK": ("the packed stream's offsets are a corpus-global "
-                      "prefix sum; land the stream, then pack in a "
-                      "downstream batch job (ASSIGN_SHARDS is the "
-                      "stream-safe layout stage)"),
-    "STRATIFIED_SAMPLE": ("the minority-stratum size is corpus-global; "
-                          "land the stream, then balance in a downstream "
-                          "batch job (MIXTURE_SAMPLE is the stream-safe "
-                          "fixed-rate alternative)"),
-    "PRIORITY_SAMPLE": ("the exact-size cut is a corpus-global top-k; "
-                        "land the stream, then sample the landed batch "
-                        "downstream (MIXTURE_SAMPLE is the stream-safe "
-                        "fixed-rate alternative)"),
-    "QUOTA_SAMPLE": ("per-stratum exact sizes are corpus-global top-k "
-                     "cuts; land the stream, then sample the landed "
-                     "batch downstream (MIXTURE_SAMPLE is the "
-                     "stream-safe fixed-rate alternative)"),
-    "WINDOW_MINHASH_DEDUP": ("the banded LSH self-join and exact verify "
-                             "need a corpus snapshot; land the stream, "
-                             "then dedup each landed batch downstream "
-                             "(streaming.windows.stream_content_dedup is "
-                             "the stream-safe exact-content alternative)"),
-    "GAPFILL": ("the dense grid bounds and the LOCF/interpolation "
-                "windows are feed-global; run the streaming rollup "
-                "(streaming.windows.time_bucket_rollup) to land bucket "
-                "aggregates incrementally, then gap-fill the landed "
-                "table downstream"),
-    "COUNTER_RATE": ("sample-to-sample lag needs each series' full "
-                     "ordered history; keep the last sample per series "
-                     "in keyed state (streaming.stateful, "
-                     "applyInPandasWithState) to emit deltas "
-                     "incrementally, or land the stream and roll up "
-                     "each landed batch downstream"),
-    "LTTB": ("the largest-triangle selection is sequential over each "
-             "series' complete point set; land the stream, then "
-             "downsample each landed slice downstream (the per-bucket "
-             "rollups — OHLC, TIME_WEIGHTED_AVG — are the incremental "
-             "alternatives)"),
-    "VALUE_TOPK": ("the frequency ranking is two chained aggregations "
-                   "(per-value counts, then the rank cut) — not ONE "
-                   "streaming query; land the stream, then rank each "
-                   "landed batch downstream (VALUE_HISTOGRAM is the "
-                   "stream-safe distribution rollup)"),
-}
+    _, params = stage.stream.signature()
+    args = ({k: q.default for k, q in params.items()}
+            | stage.stream.kwargs(tr.parameters or {}))
+    return [args.get(col, col) for col in stage.key]

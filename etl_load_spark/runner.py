@@ -150,9 +150,6 @@ def run_job(spark: SparkSession, spec: JobSpec,
     if notify and (("NOTIFY_SUCCESS" in wanted and result.status == "COMPLETED")
                    or ("NOTIFY_FAILURE" in wanted and result.status == "FAILED")):
         notify(result)
-    if result.status == "FAILED" and spec.error_handling.strategy == "FAIL_JOB" \
-            and result.error and notify is None:
-        pass
     return result
 
 

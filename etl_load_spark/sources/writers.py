@@ -480,24 +480,19 @@ def write_stream_sink(df: DataFrame, type_name: str, d: dict,
         w = (df.writeStream.outputMode("update")
              .option("checkpointLocation", streaming["checkpoint"])
              .foreachBatch(upsert))
-        trigger = streaming.get("trigger", "availableNow")
-        if trigger == "availableNow":
-            w = w.trigger(availableNow=True)
+    else:
+        w = (df.writeStream.format(fmt)
+             .outputMode(mode)
+             .option("checkpointLocation", streaming["checkpoint"]))
+        if t == "MEMORY":
+            w = w.queryName(d.get("table", job_id))
         else:
-            w = w.trigger(processingTime=trigger)
-        return w.start()
-    w = (df.writeStream.format(fmt)
-         .outputMode(mode)
-         .option("checkpointLocation", streaming["checkpoint"]))
+            w = w.option("path", d["path"])
+        if d.get("partition_by"):
+            w = w.partitionBy(*d["partition_by"])
     trigger = streaming.get("trigger", "availableNow")
     if trigger == "availableNow":
         w = w.trigger(availableNow=True)
     else:
         w = w.trigger(processingTime=trigger)
-    if t == "MEMORY":
-        w = w.queryName(d.get("table", job_id))
-    else:
-        w = w.option("path", d["path"])
-    if d.get("partition_by"):
-        w = w.partitionBy(*d["partition_by"])
     return w.start()

@@ -32,10 +32,14 @@ def test_cli_validate_ok(spec_file):
 
 def test_cli_validate_flags_unknown_types(tmp_path):
     p = tmp_path / "bad.json"
-    p.write_text(json.dumps({"jobId": "x",
-                             "source": {"type": "GOPHER", "details": {}}}))
-    out = cmd_validate(str(p))
-    assert not out["valid"] and "GOPHER" in out["problems"][0]
+    for bad, spec in [
+            ("GOPHER", {"source": {"type": "GOPHER", "details": {}}}),
+            ("NO_SUCH_STAGE", {"source": {"type": "PARQUET", "details": {}},
+                               "transformation": {"type": "NO_SUCH_STAGE"}}),
+    ]:
+        p.write_text(json.dumps({"jobId": "x", **spec}))
+        out = cmd_validate(str(p))
+        assert not out["valid"] and bad in out["problems"][0], out
 
 
 def test_cli_run_end_to_end(spark, spec_file, capsys):

@@ -668,3 +668,51 @@ def test_update_mode_narrower_merge_keys_rejected(spark, tmp_path):
     }))
     assert r.status == "FAILED"
     assert "narrower" in (r.error or "")
+
+
+_TWIN_STAGES = ["OHLC", "TREND", "VALUE_HISTOGRAM", "STATE_DURATIONS",
+                "HEARTBEAT_UPTIME", "DELTA", "VALUE_STATS", "CHANGES",
+                "INSTANT_RATE", "TIME_WEIGHTED_AVG"]
+_TWIN_SCHEMA = ("event_id bigint, user_id bigint, event_type string,"
+                " sensor bigint, kind string, ts timestamp, value double")
+
+
+@pytest.fixture(scope="module")
+def twin_feed_dir(spark, tmp_path_factory):
+    import datetime as dt
+    path = str(tmp_path_factory.mktemp("twin_feed"))
+    spark.createDataFrame(
+        [(1, 1, "a", 7, "x", dt.datetime(2024, 1, 1, 6), 10.0)],
+        _TWIN_SCHEMA).write.mode("overwrite").parquet(path)
+    return path
+
+
+@pytest.mark.parametrize("renamed", [False, True],
+                         ids=["defaults", "renamed"])
+@pytest.mark.parametrize("stage", _TWIN_STAGES)
+def test_streaming_twin_plan_carries_merge_keys(spark, twin_feed_dir,
+                                                stage, renamed):
+    """Every rollup with a streaming twin: the streaming plan built
+    through apply_transformation exposes every column of
+    streaming_merge_keys(spec) — the update-mode upsert merges on them —
+    under default parameters and with the key/type column renamed."""
+    from etl_load_spark.plans.builder import (
+        apply_transformation, streaming_merge_keys,
+    )
+    params = {"keyColumn": "sensor", "typeColumn": "kind"} if renamed \
+        else {}
+    spec = JobSpec.from_dict({
+        "jobId": f"twin-keys-{stage.lower()}",
+        "source": {"type": "PARQUET",
+                   "details": {"path": twin_feed_dir,
+                               "schema": _TWIN_SCHEMA}},
+        "transformation": {"type": stage, "parameters": params},
+    })
+    stream = spark.readStream.schema(_TWIN_SCHEMA).parquet(twin_feed_dir)
+    plan = apply_transformation(stream, spark, spec)
+    keys = streaming_merge_keys(spec)
+    assert plan.isStreaming and keys, (stage, keys)
+    assert set(keys) <= set(plan.columns), (stage, keys, plan.columns)
+    assert "bucket_ts" in keys
+    assert keys[0] in ({"sensor", "kind"} if renamed
+                       else {"user_id", "event_type"}), keys
