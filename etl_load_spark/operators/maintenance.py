@@ -28,7 +28,8 @@ partition's salt range is sized from ITS estimated bytes — a huge
 partition spreads over ~bytes/target parallel tasks and splits near the
 target (plus a ``maxRecordsPerFile`` cap), while small partitions keep
 salt=0 and stay one file each; sizing costs one column-pruned count per
-partition key broadcast back onto the data.
+partition key (the total row count is their sum, no second scan)
+broadcast back onto the data.
 """
 
 from __future__ import annotations
@@ -71,7 +72,6 @@ def compact_files(spark: SparkSession, path: str, target_file_mb: int = 128,
         shutil.rmtree(tmp)          # stale partial rewrite
     files_before, total_bytes = _dir_stats(path)
     df = getattr(spark.read, fmt)(path)
-    rows = df.count()
     target_bytes = target_file_mb * 1024 * 1024
     n_out = max(1, math.ceil(total_bytes / target_bytes))
     if partition_by:
@@ -81,14 +81,18 @@ def compact_files(spark: SparkSession, path: str, target_file_mb: int = 128,
         # PER PARTITION from its estimated bytes (rows × observed avg row
         # width), so a big partition spreads over ~its_bytes/target tasks
         # while small partitions keep salt=0 and stay one file each.
+        # One scan sizes every partition (checkpointed, so the rewrite
+        # below does not re-run it); the total row count is their sum.
+        sizes = df.groupBy(*partition_by).agg(
+            F.count(F.lit(1)).alias("_rows_p"))
+        sizes = sizes.select(
+            *[F.col(c).alias(f"_p_{c}") for c in partition_by],
+            "_rows_p").localCheckpoint()
+        rows = sizes.agg(F.sum("_rows_p")).first()[0] or 0
         avg_row = max(1, total_bytes // max(rows, 1))
         # null-safe probe join: a hive __HIVE_DEFAULT_PARTITION__ reads
         # back as NULL, and an equality join would silently DROP those
         # rows from the rewrite (data loss on swap)
-        sizes = df.groupBy(*partition_by).agg(
-            F.count(F.lit(1)).alias("_rows_p"))
-        sizes = sizes.select(
-            *[F.col(c).alias(f"_p_{c}") for c in partition_by], "_rows_p")
         cond = None
         for c in partition_by:
             eq = df[c].eqNullSafe(sizes[f"_p_{c}"])
@@ -102,15 +106,14 @@ def compact_files(spark: SparkSession, path: str, target_file_mb: int = 128,
         out = (df.join(F.broadcast(sizes), cond)
                .repartition(n_out, *[F.col(c) for c in partition_by], salt)
                .drop("_rows_p", *[f"_p_{c}" for c in partition_by]))
-    else:
-        out = df.repartition(n_out)
-    w = out.write.mode("overwrite").format(fmt)
-    if partition_by:
         # belt-and-braces size cap from observed bytes/row: even a skewed
         # task splits its output near the target
-        avg_row = max(1, total_bytes // max(rows, 1))
-        w = (w.option("maxRecordsPerFile", max(1, target_bytes // avg_row))
+        w = (out.write.mode("overwrite").format(fmt)
+             .option("maxRecordsPerFile", max(1, target_bytes // avg_row))
              .partitionBy(*partition_by))
+    else:
+        rows = df.count()
+        w = df.repartition(n_out).write.mode("overwrite").format(fmt)
     w.save(tmp)
     # swap: original → backup, compacted → original, drop backup
     os.rename(path, backup)

@@ -329,12 +329,16 @@ def rollup_upsert_writer(path: str, fmt: str, partition_col: str,
     (``key_cols`` — batch rows win), before overwriting those
     partitions.
 
-    Scale posture: per micro-batch this reads back only the touched
+    Scale posture: the batch is materialized once per micro-batch (a
+    persist released in a ``finally``) — every action on a foreachBatch
+    DataFrame would otherwise re-run the stateful stage, state-store
+    load and commit included. The merge reads back only the touched
     (open) bucket partitions — bounded by the watermark horizon, never
     the full materialization — and the anti-join's build side is the
-    batch's distinct key set (micro-batch-sized, broadcastable). The
-    merged slice is localCheckpoint'ed so no lazy read of ``path``
-    survives into the overwrite of the same path.
+    batch's distinct key set (micro-batch-sized, broadcastable). Only
+    the kept slice of ``path`` is localCheckpoint'ed: it is the one
+    input that reads the path, so no lazy read of ``path`` survives
+    into the overwrite of the same path.
 
     NULL handling: group keys join null-safely (NULL event_type is a
     legitimate rollup group — the q71 eqNullSafe lesson) and a NULL
@@ -352,7 +356,27 @@ def rollup_upsert_writer(path: str, fmt: str, partition_col: str,
     from pyspark.errors import AnalysisException
 
     def upsert(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
+        # each action on batch_df would re-run the micro-batch's stateful
+        # stage: persist it once for every step below. Persisted through
+        # observe() because the foreachBatch DataFrame can declare the
+        # stateful plan's physical ordering on attributes outside its
+        # output (OHLC's sort aggregate), which fails the cache lookup of
+        # a plain persist ("key not found"); CollectMetrics declares none
+        batch = batch_df.observe(
+            "rollup_upsert_batch", F.count(F.lit(1)).alias("rows")).persist()
+        try:
+            _merge(batch)
+        finally:
+            # blocking: the blocks are gone when the batch returns, not
+            # whenever the asynchronous removal gets to them
+            batch.unpersist(blocking=True)
+
+    def _merge(batch_df: DataFrame) -> None:
+        # the first action materializes the persist; an empty batch (the
+        # watermark's no-data micro-batch) touches no partition
+        touched = [r[0] for r in
+                   batch_df.select(partition_col).distinct().collect()]
+        if not touched:
             return
         spark = batch_df.sparkSession
         out = batch_df
@@ -367,8 +391,6 @@ def rollup_upsert_writer(path: str, fmt: str, partition_col: str,
         except AnalysisException:
             existing = None  # first batch: nothing materialized yet
         if existing is not None:
-            touched = [r[0] for r in
-                       batch_df.select(partition_col).distinct().collect()]
             non_null = [t for t in touched if t is not None]
             pcol = F.col(partition_col)
             pred = pcol.isin(non_null) if non_null else F.lit(False)
@@ -378,9 +400,11 @@ def rollup_upsert_writer(path: str, fmt: str, partition_col: str,
             cond = reduce(lambda a, b: a & b,
                           [existing[k].eqNullSafe(batch_keys[k])
                            for k in key_cols])
+            # only the kept rows read ``path``: checkpoint them so no
+            # lazy read of the path survives into its overwrite
             kept = existing.where(pred).join(
-                F.broadcast(batch_keys), cond, "left_anti")
-            out = batch_df.unionByName(kept).localCheckpoint()
+                F.broadcast(batch_keys), cond, "left_anti").localCheckpoint()
+            out = batch_df.unionByName(kept)
         (out.write.mode("overwrite")
          .format(fmt)
          .option("partitionOverwriteMode", "dynamic")

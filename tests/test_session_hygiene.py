@@ -99,3 +99,62 @@ def test_lm_surprisal_annotate_rejects_cut_params(spark, sf_dir):
         _lm_surprisal_transform(df, {"mode": "annotate",
                                      "keepQuantile": 0.5})
     release_operator_caches()
+
+
+
+def _trend_rollup_spec(src, dest):
+    """The examples/continuous_trend_rollup.json shape on ``src``."""
+    from etl_load_spark.spec import JobSpec
+
+    return JobSpec.from_dict({
+        "jobId": "hygiene_trend_rollup",
+        "source": {"type": "PARQUET", "details": {"path": src}},
+        "query": ("SELECT event_id, user_id, CAST(ts AS TIMESTAMP_LTZ)"
+                  " AS ts, value FROM src"),
+        "transformation": {"type": "TREND",
+                           "parameters": {"keyColumn": "user_id",
+                                          "tsColumn": "ts",
+                                          "valueColumn": "value",
+                                          "bucket": "1 day",
+                                          "watermark": "30 minutes"}},
+        "destination": {"type": "PARQUET",
+                        "details": {"path": dest,
+                                    "partition_by": ["bucket_ts"],
+                                    "compact_target_mb": 64}},
+        "streaming": {"checkpoint": dest + "_chk", "output_mode": "update"},
+        "steps": ["VALIDATE_SOURCE", "LOAD", "COMPACT_DESTINATION",
+                  "VALIDATE_LOAD"],
+        "expectations": [{"check": "not_null", "column": "bucket_ts"},
+                         {"check": "not_null", "column": "n_samples"}],
+    })
+
+
+def test_streaming_rollup_upsert_releases_batch_persist(spark, tmp_path):
+    """The update-mode upsert persists each foreachBatch DataFrame so the
+    stateful micro-batch runs once; the persist must be gone after the
+    job — also when the upsert raises (here: the destination path is an
+    existing regular file, which the merge cannot read back as parquet)."""
+    import datetime as dt
+
+    from etl_load_spark.runner import run_job
+
+    src = str(tmp_path / "in")
+    day = dt.datetime(2024, 5, 1)
+    spark.createDataFrame(
+        [(i, i % 3, day + dt.timedelta(hours=i), float(i * 7 % 50))
+         for i in range(24)],
+        "event_id bigint, user_id bigint, ts timestamp, value double",
+    ).coalesce(1).write.parquet(src)
+
+    ok = run_job(spark, _trend_rollup_spec(src, str(tmp_path / "out")))
+    assert ok.status == "COMPLETED", ok.error
+    assert ok.records_read == 24
+    assert _cache_manager(spark).isEmpty()
+
+    bad_dest = tmp_path / "not_a_dir"
+    bad_dest.write_bytes(b"not a parquet file")
+    bad = run_job(spark, _trend_rollup_spec(src, str(bad_dest)))
+    assert bad.status == "FAILED"
+    # raised inside the upsert, after it persisted the batch
+    assert "FOREACH_BATCH_USER_FUNCTION_ERROR" in (bad.error or "")
+    assert _cache_manager(spark).isEmpty()
